@@ -18,6 +18,7 @@ plain path in tests.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -31,7 +32,6 @@ def explode_caption_tags(df: DataFrame, col: str = "caption") -> DataFrame:
 def salted_count(
     df: DataFrame,
     keys: list[str],
-    salt_src: str = "image_id",
     n_salt: int = 8,
     count_alias: str = "count",
 ) -> DataFrame:
@@ -51,12 +51,17 @@ def salted_count(
     (the guide §2.5 rand()-repartition hazard does not apply — no row
     changes its reducer on recompute).
 
-    ``salt_src`` names the high-cardinality column the pre-round-6 hash
-    salt used; it is kept (and validated) so callers can still document
-    intent, but the partition-id salt no longer reads it.
+    Precondition of the split: a hot key spreads across reducers only
+    when its rows come from at least ``n_salt`` map partitions. Rows
+    from fewer partitions (a small input, a few single-row-group files,
+    an upstream repartition by the key) share fewer salts, so the key
+    lands on fewer reducers; the count stays exact and map-side partial
+    aggregation still shrinks what each reducer gets. There is no
+    fallback to the row-hash salt for inputs with fewer partitions: the
+    flagship input is written one file per core, so the fallback would
+    move it onto the hash salt, which measured slower (2.18 s vs
+    1.94 s, above).
     """
-    if salt_src and salt_src not in df.columns and salt_src != "image_id":
-        raise ValueError(f"salt_src column {salt_src!r} not in input")
     salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt)).alias("_salt")
     partial = df.groupBy(*keys, salt).agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy(*keys).agg(F.sum("_partial").cast("double").alias(count_alias))
@@ -118,7 +123,10 @@ def adaptive_salted_count(
     if not hot:
         return plain_count(df, keys, count_alias)
     dim = spark.createDataFrame(
-        [(*k, max(2, int(share * n_part * 2 + 1))) for k, share in hot],
+        pd.DataFrame(
+            [(*k, max(2, int(share * n_part * 2 + 1))) for k, share in hot],
+            columns=[*keys, "_factor"],
+        ),
         df.select(*keys).schema.add("_factor", "integer"),
     )
     with_f = df.join(F.broadcast(dim), keys, "left").na.fill({"_factor": 1})
@@ -127,9 +135,7 @@ def adaptive_salted_count(
     return partial.groupBy(*keys).agg(F.sum("_partial").cast("double").alias(count_alias))
 
 
-def hex_features(
-    assignments: DataFrame, n_salt: int = 16, salted: bool = True
-) -> DataFrame:
+def hex_features(assignments: DataFrame, salted: bool = True) -> DataFrame:
     """The A1/A2 aggregation: per-(h3, feature) counts over the spatial
     join output. Narrow-form equivalent of the reference's pivot +
     groupby('h3').sum() (make_dataset.py:143-172)."""

@@ -342,7 +342,7 @@ def skipgram_fit_sharded(
     # driver never materializes V rows, let alone V x dim floats
     vocab_df = touch.select("key").distinct()
     weights = (
-        vocab_df.crossJoin(spark.createDataFrame([(0,), (1,)], "m int"))
+        vocab_df.crossJoin(spark.range(2).select(F.col("id").cast("int").alias("m")))
         .repartition("m", "key")
         .mapInPandas(init_fn, "m int, key long, vec array<double>")
     )

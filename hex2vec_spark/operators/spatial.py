@@ -178,52 +178,60 @@ def tiling_table(
     return spark.read.parquet(path)
 
 
-# Encode-plan memo: {session (weak) -> OrderedDict{subkey -> DataFrame}}.
-# Round-4 advisor fix: the old flat module dict keyed tuples BY session,
-# so entries (and the lazily localCheckpoint'ed blocks the hybrid path
-# pins on executors) outlived the session and grew without bound across
-# stage-dir rewrites. Weak keying drops a session's entries when the
-# session object goes away, an explicit liveness check drops them when
-# it is .stop()ed but still referenced, and an LRU cap bounds the
-# per-session entry count (each miss re-derives a lazy plan — cheap).
-import collections
-import weakref
+def _encode_h3_jvm(images: DataFrame, res: int, bbox, supported: bool) -> DataFrame:
+    """assign_h3's JVM path: the single-face chain when ``supported``,
+    else the global hybrid (the Arrow kernel only on streams)."""
+    from ..functions import h3_expr
 
-_ENCODE_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_ENCODE_MEMO_CAP = 32
-
-
-def _session_live(session) -> bool:
-    try:
-        return session.sparkContext._jsc is not None
-    except Exception:
-        return False
-
-
-def _memo_get(session, subkey):
-    if not _session_live(session):
-        _ENCODE_MEMO.pop(session, None)
-        return None
-    per = _ENCODE_MEMO.get(session)
-    if per is None:
-        return None
-    hit = per.get(subkey)
-    if hit is not None:
-        per.move_to_end(subkey)
-    return hit
-
-
-def _memo_put(session, subkey, df) -> None:
-    # opportunistically drop stopped-but-referenced sessions
-    for s in [s for s in list(_ENCODE_MEMO) if not _session_live(s)]:
-        _ENCODE_MEMO.pop(s, None)
-    if not _session_live(session):
-        return
-    per = _ENCODE_MEMO.setdefault(session, collections.OrderedDict())
-    per[subkey] = df
-    per.move_to_end(subkey)
-    while len(per) > _ENCODE_MEMO_CAP:
-        per.popitem(last=False)
+    if supported:
+        return h3_expr.attach_h3_from_phash_jvm(images, res, bbox, out="h3")
+    elif not images.isStreaming:
+        # GLOBAL HYBRID (round 3): the bbox spans faces/seams, so
+        # the single-face chain is out — but ~81% of an
+        # area-uniform global sample still satisfies the kernel's
+        # fast-path condition per row (unambiguous nearest face +
+        # home-homed anchor slot, attach_h3_jvm_global docstring),
+        # and a second JVM pass over the residue replicates the
+        # kernel's FOREIGN branch (home-face re-chain + consistency
+        # check, attach_h3_jvm_home) — only ~2.8% of global rows
+        # (the kernel's own seam-scan band) reach Python. Both
+        # passes are BIT-IDENTICAL to the kernel on every row they
+        # claim.
+        #
+        # COST SHAPE: each pass is lazily localCheckpoint'ed so the
+        # three output branches read MATERIALIZED rows instead of
+        # re-running the chains per branch (measured at 6M rows:
+        # naive 3-branch recompute 19.96 s; checkpointed 2.26 s;
+        # the pure-Arrow kernel 1.75 s). Locally the vectorized
+        # NumPy kernel is ~1.3x faster in wall-clock — the hybrid
+        # is the default anyway because it removes the Python
+        # worker beside every task thread on 97% of rows, which is
+        # exactly what capped multi-executor scaling efficiency
+        # (round-1 flagship: 0.44 raw with Arrow encode). Wall-
+        # clock-first local runs can pass jvm="off". Checkpoint
+        # blocks persist for the session (the plan cache reuses them).
+        g = h3_expr.attach_h3_from_phash_jvm_global(
+            images, res, bbox, out="h3"
+        ).localCheckpoint(eager=False)
+        good = g.where(F.col("h3").isNotNull())
+        resid = g.where(F.col("h3").isNull()).drop("h3")
+        lat_sql, lng_sql = h3_expr._phash_latlng_sql(bbox)
+        h = h3_expr.attach_h3_jvm_home(
+            resid, res, lat=lat_sql, lng=lng_sql, out="h3"
+        ).localCheckpoint(eager=False)
+        good2 = h.where(F.col("h3").isNotNull())
+        bad = h.where(F.col("h3").isNull()).drop("h3").withColumn(
+            "h3",
+            F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1)),
+        )
+        return good.unionByName(good2).unionByName(bad)
+    else:
+        # streaming + unsupported bbox: localCheckpoint is not
+        # available on streams — Arrow kernel end-to-end
+        return images.withColumn(
+            "h3",
+            F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1)),
+        )
 
 
 def assign_h3(
@@ -257,88 +265,41 @@ def assign_h3(
     ``jvm``: "auto" (fast path when exact), "off" (always Arrow),
     "force" (raise if the fast path isn't exact for this bbox/res).
 
-    The JVM-path result is memoized per (session, source-plan semantic
-    hash, res, bbox): several queries over the same scan (the bench's
+    The JVM-path result is kept in the session's plan cache
+    (plans/session.cached_plan) per (source-plan semantic hash, source
+    files, res, bbox): several queries over the same scan (the bench's
     hex_features + context_pairs, any multi-query pipeline) pay the
     chain's plan construction once. DataFrames are immutable, so
-    reusing the object is safe; the memo never caches DATA, only the
+    reusing the object is safe; the cache never holds DATA, only the
     lazy plan.
     """
     if jvm != "off":
         from ..functions import h3_expr
+        from ..plans.session import cached_plan
 
         supported = h3_expr.supports_bbox(bbox, res)
         if not supported and jvm == "force":
             raise ValueError(f"JVM encode not exact for bbox={bbox} res={res}")
+
+        def build() -> DataFrame:
+            return _encode_h3_jvm(images, res, bbox, supported)
+
         try:
             # key includes the SOURCE FILE SNAPSHOT: part-file names
             # are unique per write, so rewriting the same path (the
-            # pipeline's stage dirs) misses the memo instead of
+            # pipeline's stage dirs) misses the cache instead of
             # serving a stale file index (observed FAILED_READ_FILE
             # when keyed on semantic hash alone)
             sess = images.sparkSession
             key = (
+                "h3",
                 images._jdf.queryExecution().analyzed().semanticHash(),
                 hash(tuple(sorted(images.inputFiles()))),
                 res, bbox,
             )
-            hit = _memo_get(sess, key)
-            if hit is not None:
-                return hit
-        except Exception:  # non-classic DataFrame: skip the memo
-            sess = key = None
-        if supported:
-            enc = h3_expr.attach_h3_from_phash_jvm(images, res, bbox, out="h3")
-        elif not images.isStreaming:
-            # GLOBAL HYBRID (round 3): the bbox spans faces/seams, so
-            # the single-face chain is out — but ~81% of an
-            # area-uniform global sample still satisfies the kernel's
-            # fast-path condition per row (unambiguous nearest face +
-            # home-homed anchor slot, attach_h3_jvm_global docstring),
-            # and a second JVM pass over the residue replicates the
-            # kernel's FOREIGN branch (home-face re-chain + consistency
-            # check, attach_h3_jvm_home) — only ~2.8% of global rows
-            # (the kernel's own seam-scan band) reach Python. Both
-            # passes are BIT-IDENTICAL to the kernel on every row they
-            # claim.
-            #
-            # COST SHAPE: each pass is lazily localCheckpoint'ed so the
-            # three output branches read MATERIALIZED rows instead of
-            # re-running the chains per branch (measured at 6M rows:
-            # naive 3-branch recompute 19.96 s; checkpointed 2.26 s;
-            # the pure-Arrow kernel 1.75 s). Locally the vectorized
-            # NumPy kernel is ~1.3x faster in wall-clock — the hybrid
-            # is the default anyway because it removes the Python
-            # worker beside every task thread on 97% of rows, which is
-            # exactly what capped multi-executor scaling efficiency
-            # (round-1 flagship: 0.44 raw with Arrow encode). Wall-
-            # clock-first local runs can pass jvm="off". Checkpoint
-            # blocks persist for the session (the memo reuses them).
-            g = h3_expr.attach_h3_from_phash_jvm_global(
-                images, res, bbox, out="h3"
-            ).localCheckpoint(eager=False)
-            good = g.where(F.col("h3").isNotNull())
-            resid = g.where(F.col("h3").isNull()).drop("h3")
-            lat_sql, lng_sql = h3_expr._phash_latlng_sql(bbox)
-            h = h3_expr.attach_h3_jvm_home(
-                resid, res, lat=lat_sql, lng=lng_sql, out="h3"
-            ).localCheckpoint(eager=False)
-            good2 = h.where(F.col("h3").isNotNull())
-            bad = h.where(F.col("h3").isNull()).drop("h3").withColumn(
-                "h3",
-                F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1)),
-            )
-            enc = good.unionByName(good2).unionByName(bad)
-        else:
-            # streaming + unsupported bbox: localCheckpoint is not
-            # available on streams — Arrow kernel end-to-end
-            enc = images.withColumn(
-                "h3",
-                F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1)),
-            )
-        if key is not None:
-            _memo_put(sess, key, enc)
-        return enc
+        except Exception:  # non-classic DataFrame: skip the cache
+            return build()
+        return cached_plan(sess, key, build)
     return images.withColumn(
         "h3", F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1))
     )

@@ -8,6 +8,7 @@ overridable for cluster runs via spark-submit --conf.
 
 from __future__ import annotations
 
+import collections
 import os
 
 from pyspark.sql import SparkSession
@@ -60,7 +61,10 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    mem = os.environ.get("SPARK_GRAFT_MEM", "48g")
+    # default heap: 48g, but never more than half the host's RAM — a
+    # larger local-mode heap gets the JVM OOM-killed on small hosts
+    half_ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    mem = os.environ.get("SPARK_GRAFT_MEM", f"{min(48 * 1024, half_ram_mb)}m")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -104,3 +108,53 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Per-session plan cache: lazy DataFrames (never data) keyed by what
+# determines them. The entries live in an attribute ON the session, so
+# they go when the session object goes — the cached DataFrames reference
+# their session, which rules out a module-level (even weak-keyed) dict.
+# A stopped but still-referenced session gets misses and loses its
+# entries. The LRU cap bounds a session that keeps deriving new keys
+# (stage-dir rewrites); a full correctness-gate run peaks at 24 entries.
+PLAN_CACHE_CAP = 64
+_PLAN_CACHE_ATTR = "_hex2vec_plan_cache"
+
+
+def clear(spark) -> None:
+    """Drop every cached plan of ``spark``."""
+    vars(spark).pop(_PLAN_CACHE_ATTR, None)
+
+
+def _plan_entries(spark) -> collections.OrderedDict | None:
+    try:
+        live = spark.sparkContext._jsc is not None
+    except Exception:  # no JVM context (stopped, or not a classic session)
+        live = False
+    if not live:
+        clear(spark)
+        return None
+    return vars(spark).setdefault(_PLAN_CACHE_ATTR, collections.OrderedDict())
+
+
+def cached_plan(spark, key, build):
+    """``spark``'s cached plan for ``key``; on a miss, ``build()`` it and
+    keep it (least recently used entries go past PLAN_CACHE_CAP)."""
+    entries = _plan_entries(spark)
+    if entries is None:
+        return build()
+    if key in entries:
+        entries.move_to_end(key)
+        return entries[key]
+    plan = entries[key] = build()
+    while len(entries) > PLAN_CACHE_CAP:
+        entries.popitem(last=False)
+    return plan
+
+
+def cached_parquet(spark, path: str):
+    """``spark.read.parquet(path)``, reused per session: the read infers
+    the footer schema and lists the files on every call (~0.1 s), so a
+    path that stays unchanged for the session is read once. Callers own
+    that condition — a path rewritten in place must not come here."""
+    return cached_plan(spark, ("parquet", path), lambda: spark.read.parquet(path))

@@ -285,7 +285,7 @@ class TestEndToEndBuild:
 
         root = str(tmp_path / "ds2")
         build_dataset(spark, images_table(spark, 500), regions_pandas(), root,
-                      res=RES, n_buckets=2, adaptive_salt=True)
+                      res=RES, n_buckets=2)
         sel = load_processed(spark, root, select_regions=["r00", "r01"]).toPandas()
         assert set(sel["region_id"]) <= {"r00", "r01"}
         dropped = load_processed(spark, root, drop_regions=["r00"]).toPandas()

@@ -143,7 +143,7 @@ class TestTopKPlans:
         from hex2vec_spark.operators.agg import salted_count
 
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        q = salted_count(li, ["l_returnflag"], salt_src="l_orderkey")
+        q = salted_count(li, ["l_returnflag"])
         plan = plan_of(q)
         # two logical groupBys -> at least two HashAggregate pairs, and
         # the round-6 partition-id salt (pmod of SPARK_PARTITION_ID —
